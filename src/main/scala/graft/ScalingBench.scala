@@ -307,8 +307,8 @@ object ScalingBench {
   }
 
   /** The measured job: full per-lang sketch battery over the pages table —
-    * all four sketches as pure-Catalyst TypedImperativeAggregates (zero-copy
-    * UTF8String folds; same bytes as the udaf path, NativeParitySpec). */
+    * all four sketches as the one `SketchAgg` under their native names
+    * (zero-copy UTF8String folds; same bytes as the plain names, NativeParitySpec). */
   private def job(spark: SparkSession, dir: String): Unit = {
     import graft.spark.aggs.{NativeHllCountAgg, NativeSketchAggs}
     val pages = spark.read.parquet(dir)

@@ -593,8 +593,8 @@ object SparkQueries {
         SketchFunctions.bfEstimate(
           SketchUdafs.bloom(100000, 0.01)(col("text"))).as("bloom_estimate"))
 
-  /** Native (pure-Catalyst TypedImperativeAggregate) HLL next to the udaf
-    * path — identical estimates, zero-copy update. */
+  /** The HLL aggregate under its native name next to the plain
+    * `hllCount` — identical estimates. */
   def hllDistinctNative(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "documents")
       .select(col("lang"), col("text"))

@@ -282,7 +282,7 @@ object Dedup extends Serializable {
     * directory another concurrent job configured, `checkpointDir` is applied
     * only when the context has none yet — an already-configured session
     * checkpoint dir takes precedence (and is left untouched). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
+  def connectedComponents(edgePairs: DataFrame, maxIters: Int = 25,
                           checkpointDir: Option[String] = None,
                           maxDriverEdges: Long = 1L << 20): DataFrame = {
     // round 7: SIZE-ADAPTIVE fast path, the heavySet limit-probe pattern —
@@ -297,6 +297,8 @@ object Dedup extends Serializable {
     // path, which then runs the unchanged distributed min-label +
     // pointer-halving rounds (the 10^12-doc shape). Pass
     // maxDriverEdges = 0 to force the distributed path (the specs do).
+    // An edge with a null endpoint joins nothing: both paths drop it.
+    val pairs = edgePairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
     if (maxDriverEdges > 0) {
       val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
       val probe = pairs

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.BloomFilter
 import graft.ext.{Hll, Kll}
+import graft.spark.aggs.SaltedAgg
+import graft.spark.fns.SketchFunctions
 
 /** Per-partition sketch checkpointing with lineage + metrics
   * (SURVEY.md §7.4; the north rule's resumability requirement).
@@ -77,29 +79,20 @@ object Checkpoints {
     } catch { case _: Throwable => Set.empty }
   }
 
-  /** Final merge: fold every partial row per lang into the result sketches.
-    * Runs as an aggregate over the (tiny) checkpoint table. */
+  /** Final merge: fold every partial row per lang into the result sketches
+    * with the merge aggregates. Runs as an aggregate over the (tiny)
+    * checkpoint table. */
   def mergeFinal(spark: SparkSession, checkpointDir: String, jobId: String): DataFrame = {
-    import spark.implicits._
-    val rows = read(spark, checkpointDir).filter(col("job_id") === jobId)
-      .select(col("lang"), col("rows_in"), col("hll"), col("bloom"), col("kll"))
-      .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
-    rows.groupByKey(_._1).mapGroups { (lang, it) =>
-      var hll: Hll = null
-      var blm: BloomFilter = null
-      var kll: Kll = null
-      var n = 0L
-      it.foreach { case (_, rowsIn, hb, bb, kb) =>
-        val h = Hll.fromBytes(hb); val b = BloomFilter.fromBytes(bb); val k = Kll.fromBytes(kb)
-        if (hll == null) { hll = h; blm = b; kll = k } else {
-          hll.merge(h); blm.orInPlace(b); kll.merge(k)
-        }
-        n += rowsIn
-      }
-      (lang, n, hll.estimate, blm.estimateElements,
-        kll.quantile(0.5), kll.quantile(0.95), hll.toBytes, blm.toBytes, kll.toBytes)
-    }.toDF("lang", "rows_in", "distinct_urls", "bloom_estimate",
-      "len_p50", "len_p95", "hll", "bloom", "kll")
+    val lenQuantiles = SketchFunctions.kllQuantiles(col("kll"), array(lit(0.5), lit(0.95)))
+    read(spark, checkpointDir).filter(col("job_id") === jobId)
+      .groupBy(col("lang"))
+      .agg(sum(col("rows_in")).as("rows_in"), SaltedAgg.hllUnion(col("hll")).as("hll"),
+        SaltedAgg.bloomUnion(col("bloom")).as("bloom"), SaltedAgg.kllMerge(col("kll")).as("kll"))
+      .select(col("lang"), col("rows_in"),
+        SketchFunctions.hllEstimate(col("hll")).as("distinct_urls"),
+        SketchFunctions.bfEstimate(col("bloom")).as("bloom_estimate"),
+        lenQuantiles(0).as("len_p50"), lenQuantiles(1).as("len_p95"),
+        col("hll"), col("bloom"), col("kll"))
   }
 }
 

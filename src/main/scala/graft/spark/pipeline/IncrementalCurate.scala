@@ -260,10 +260,12 @@ object IncrementalCurate {
     * the path split is exercised by the existing suites (sf fixtures take
     * the driver path; maxDriverEdges = 0 in CC specs keeps the distributed
     * machinery covered). */
-  private[graft] def fuzzyDropSet(spark: SparkSession, pairs: DataFrame,
+  private[graft] def fuzzyDropSet(spark: SparkSession, edgePairs: DataFrame,
                                      freshOnly: DataFrame, watermark: Long,
                                      maxDriverEdges: Long = 1L << 20): DataFrame = {
     import spark.implicits._
+    // a null endpoint neither anchors a batch doc nor links one: both paths drop it
+    val pairs = edgePairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
     val lim = (math.min(maxDriverEdges, (Int.MaxValue - 2).toLong) + 1L).toInt
     val probe = pairs.select(col("id_a"), col("id_b")).limit(lim).collect()
     if (probe.length < lim) {

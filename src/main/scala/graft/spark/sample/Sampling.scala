@@ -233,10 +233,11 @@ object Sampling {
       val shift = shifts(s)
       // bucket = arithmetic-shift prefix: signed-monotone in the key, so
       // walking buckets in descending signed order walks keys descending
+      // (a reversed ordering, not a negated key: -Long.MinValue overflows)
       val counts = proj.filter(keyCol >= lo && keyCol <= hi)
         .groupBy(shiftright(keyCol, shift).as("b")).count()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(-_._1)
+        .sortBy(_._1)(Ordering[Long].reverse)
       var i = 0
       var narrowed = false
       while (i < counts.length && !narrowed) {
@@ -290,7 +291,7 @@ object Sampling {
       val counts = proj.filter(col("__kb") >= lo && col("__kb") <= hi)
         .groupBy(shiftright(col("__kb"), shift).as("b")).count()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(-_._1)
+        .sortBy(_._1)(Ordering[Long].reverse)
       var i = 0
       var narrowed = false
       while (i < counts.length && !narrowed) {

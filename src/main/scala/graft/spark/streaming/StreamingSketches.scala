@@ -21,7 +21,7 @@ case class RotatingDedupEvent(key: String, value: String, first_seen: Boolean)
   *   - `ExpandingBloomFilter` growth → the aggregator buffer grows inside
   *     the window's state.
   *
-  * Because every sketch aggregator is an associative+commutative udaf, it
+  * Because every sketch aggregate is associative+commutative, it
   * rides Spark's incremental aggregation state store directly — no custom
   * `flatMapGroupsWithState` needed for these shapes.
   */

@@ -194,4 +194,23 @@ class BandIndexSpec extends AnyFunSuite {
       BandIndex.drop(spark, "graft_bidx_t4c")
     }
   }
+
+  test("filesPerBucket treats dot-prefixed subdirectories as non-data") {
+    import graft.spark.dedup.IndexIO
+    BandIndex.create(docs.filter(col("doc_id") < 30), "doc_id", "text", "graft_bidx_dot",
+      BandIndex.Conf(numBuckets = 4))
+    try {
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("graft_bidx_dot"))
+        .location)
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a Hadoop-convention hidden staging directory next to the flat data
+      assert(fs.mkdirs(new org.apache.hadoop.fs.Path(loc, ".staging")))
+      assert(IndexIO.filesPerBucket(spark, "graft_bidx_dot", 4) == 1.0)
+      // a real data subdirectory still fails loudly
+      assert(fs.mkdirs(new org.apache.hadoop.fs.Path(loc, "lang=en")))
+      assertThrows[IllegalArgumentException](
+        IndexIO.filesPerBucket(spark, "graft_bidx_dot", 4))
+    } finally BandIndex.drop(spark, "graft_bidx_dot")
+  }
 }

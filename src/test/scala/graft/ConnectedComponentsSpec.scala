@@ -39,6 +39,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("null-id edges are dropped: both paths give the null-free components") {
+    import spark.implicits._
+    val edges = Seq((Some(5L), Some(3L)), (None, Some(9L)), (Some(3L), None),
+      (Some(1L), Some(2L)), (None, None)).toDF("id_a", "id_b")
+    def labels(maxDriverEdges: Long): Set[(Any, Any)] =
+      Dedup.connectedComponents(edges, maxDriverEdges = maxDriverEdges)
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+    val want: Set[(Any, Any)] = Set((5L, 3L), (3L, 3L), (1L, 1L), (2L, 1L))
+    assert(labels(1L << 20) == want, "driver union-find path")
+    assert(labels(0L) == want, "distributed rounds")
+  }
+
   test("result is invariant to partitioning") {
     val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (9L, 1L))
     assert(run(pairs, 1) == run(pairs, 7))

@@ -305,6 +305,25 @@ class DataPipelineSpec extends AnyFunSuite {
     assert(fast.nonEmpty) // the random graph must actually exercise drops
   }
 
+  test("fuzzyDropSet: null-id edges are dropped on both paths") {
+    import spark.implicits._
+    val watermark = 1000L
+    val clean = Seq((1001L, 1002L), (1003L, 1004L), (5L, 1006L))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    // a null endpoint must neither anchor a batch doc nor alias node 0
+    val withNulls = clean ++ Seq((None, Some(1003L)), (Some(1001L), None), (None, None))
+    val freshOnly = (1001L to 1006L).toDF("doc_id")
+    def drops(edges: Seq[(Option[Long], Option[Long])], bound: Long): Set[Long] =
+      graft.spark.pipeline.IncrementalCurate
+        .fuzzyDropSet(spark, edges.toDF("id_a", "id_b"), freshOnly, watermark,
+          maxDriverEdges = bound)
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    val want = drops(clean, 1L << 20)
+    assert(want == Set(1002L, 1004L, 1006L))
+    assert(drops(withNulls, 1L << 20) == want, "driver path")
+    assert(drops(withNulls, 0L) == want, "distributed path")
+  }
+
   test("shard assignment is content-addressed and covers all shards") {
     import spark.implicits._
     val df = (0L until 500L).map(i => (i, s"t$i")).toDF("doc_id", "text")

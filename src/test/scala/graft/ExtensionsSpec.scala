@@ -217,9 +217,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rewrite path buffers serialize in the reference HLL byte format") {
-    // the ScalaAggregator the rule builds must carry the SketchEncoders
-    // TransformingEncoder (reference bytes across the shuffle), not kryo:
-    // its buffer serializer output must parse as Hll.fromBytes
+    // the aggregate the rule builds must ship its buffer across the shuffle
+    // as the reference HLL export itself (no encoder row, no kryo)
     withExtSession { spark =>
       spark.conf.set("spark.graft.hll.rewriteCountDistinct", "true")
       try {
@@ -231,22 +230,17 @@ class ExtensionsSpec extends AnyFunSuite {
           case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
             a.aggregateExpressions
         }.flatten
-        val scalaAggs = aggExprs.flatMap(_.collect {
-          case s: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] => s
+        val sketchAggs = aggExprs.flatMap(_.collect {
+          case s: graft.spark.aggs.SketchAgg[_] => s
         })
-        assert(scalaAggs.nonEmpty, "rewritten ScalaAggregator not found in plan")
-        val agg = scalaAggs.head.asInstanceOf[
-          org.apache.spark.sql.execution.aggregate.ScalaAggregator[String, graft.ext.Hll, Long]]
+        assert(sketchAggs.nonEmpty, "rewritten SketchAgg not found in plan")
+        val agg = sketchAggs.head.asInstanceOf[graft.spark.aggs.SketchAgg[graft.ext.Hll]]
+        assert(agg.prettyName == "graft_hll_count")
         val buf = agg.createAggregationBuffer()
         (0 until 100).foreach(i => buf.add(s"x$i"))
-        // serialize() emits the buffer as a 1-column UnsafeRow; the BINARY
-        // field inside must be the reference HLL export, not kryo bytes
-        val rowBytes = agg.serialize(buf)
-        val row = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(1)
-        row.pointTo(rowBytes, rowBytes.length)
-        val payload = row.getBinary(0)
-        assert(payload.toSeq == buf.toBytes.toSeq)
-        val back = graft.ext.Hll.fromBytes(payload) // kryo bytes would fail here
+        val bytes = agg.serialize(buf)
+        assert(bytes.toSeq == buf.toBytes.toSeq)
+        val back = graft.ext.Hll.fromBytes(bytes) // kryo bytes would fail here
         assert(back.estimate == buf.estimate)
       } finally spark.conf.set("spark.graft.hll.rewriteCountDistinct", "false")
     }

@@ -261,6 +261,20 @@ class SamplingSpec extends AnyFunSuite {
     assert(!plan.contains("TakeOrdered"), plan)
   }
 
+  test("topKFlags: tie walk at the Long.MaxValue id boundary does not overflow") {
+    import spark.implicits._
+    // ids in [Long.MaxValue - 65535, Long.MaxValue] bit-flip to the lowest
+    // 16-bit bucket of the ~id walk, where ~Long.MaxValue == Long.MinValue;
+    // a negating descending sort overflows there and walks that id first
+    val ids = (Long.MaxValue - 4L to Long.MaxValue - 1L) :+ Long.MaxValue
+    val df = ids.map(id => (id, 1.5)).toDF("id", "key")
+    (1 to 4).foreach { k =>
+      val got = Sampling.topKFlags(df, "id", col("key"), k.toLong, tieCollectMax = 1L)
+        .filter(col("selected")).select(col("id")).collect().map(_.getLong(0)).toSet
+      assert(got == ids.take(k).toSet, s"k=$k")
+    }
+  }
+
   test("topKFlags: NaN keys and internal-name collisions fail loudly") {
     import spark.implicits._
     val nan = Seq((1L, 1.0), (2L, Double.NaN), (3L, 2.0)).toDF("id", "key")
