@@ -4,16 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.spark.{SparkQueries, VerifiedQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` maps operator names (SURVEY.md §2 inventory) to DataFrame
   * builders over the driver's parquet tables; `oracleSql` carries the DuckDB
-  * oracle for each. Round 2 converted the sketch-estimate queries to
-  * probe → exact-verify projections (VerifiedQueries): the sketch pipeline
-  * runs end-to-end, the exact ground truth is computed in the same job, and
-  * the emitted columns are deterministic (exact values + within-bound
-  * booleans) — so every operator now has a hard DuckDB-checkable oracle.
-  * The raw-estimate variants stay in SparkQueries for the bench path.
+  * oracle for each. Every operator pipeline is defined once, in
+  * [[graft.spark.SparkQueries]] — the builders Bench times. Exact-oracle and
+  * membership queries map to those builders directly. A sketch-estimate
+  * query maps to its [[graft.spark.VerifiedQueries]] form: the same
+  * SparkQueries estimate plus an exact-verify projection (exact ground truth
+  * from the same input, joined on the group key, reduced to exact values
+  * plus within-bound booleans), so every operator has a hard
+  * DuckDB-checkable oracle. Queries with no bench twin are defined in
+  * VerifiedQueries alone.
   */
 object SparkEntry {
   /** Flagship query on sf=0.001; driver smoke-checks rows>0: the full sketch
@@ -59,7 +62,7 @@ object SparkEntry {
     "q_cuckoo_members" -> (SparkQueries.cuckooMembers(_, _)),
     "q_qf_members" -> (SparkQueries.qfMembers(_, _)),
     "q_ebf_members" -> (SparkQueries.ebfMembers(_, _)),
-    // sketch estimates, probe -> exact-verify projections
+    // sketch estimates + exact-verify projections
     "q_hll_distinct" -> (VerifiedQueries.hllDistinctVerified(_, _)),
     "q_hll_native" -> (VerifiedQueries.hllDistinctNativeVerified(_, _)),
     "q_salted_hll" -> (VerifiedQueries.saltedDistinctUsersVerified(_, _)),

@@ -6,23 +6,22 @@ import org.apache.spark.sql.functions._
 
 import graft.spark.aggs._
 import graft.spark.ann.Ann
-import graft.spark.dedup.Dedup
 import graft.spark.fns.{SketchExpressions, SketchFunctions}
-import graft.spark.text.{LangFixture, TextFunctions}
+import graft.spark.text.TextFunctions
 
-/** Probe → exact-verify variants of the sketch queries: each runs the sketch
-  * pipeline end-to-end AND computes the exact ground truth in the same job,
-  * emitting only deterministic, DuckDB-reproducible columns (exact values +
-  * within-bound booleans). A sketch bug flips a boolean or drops a row →
-  * the driver's hash compare goes red. This converts the round-1 `no_oracle`
-  * rows into hard driver signal (VERDICT.md "Next round" #2) without faking
-  * determinism — the estimates themselves stay visible in the pure variants
-  * ([[SparkQueries]]) that the bench runs.
+/** The oracle-checkable form of each query whose raw output is not
+  * deterministic. For a sketch query this is the [[SparkQueries]] estimate —
+  * the same builder Bench times, never a second copy of the pipeline — plus
+  * an exact-verify projection: exact ground truth computed from the same
+  * input, joined on the group key, and reduced to exact values plus
+  * within-bound booleans (`withinBound`, `quantileRankChecks`, top-1
+  * heavy-hitter containment). A sketch bug flips a boolean or drops a row,
+  * and the driver's hash compare goes red. Queries with no bench twin (the
+  * sketch query exists only in its verified form) define their pipeline
+  * here, as do the fixture-driven, streaming and multimodal contracts.
   */
 object VerifiedQueries {
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  import SparkQueries.{sketchBytes, tbl}
 
   /** |est − exact| <= max(relTol·exact, absSlack) as a Column. */
   private def withinBound(est: Column, exact: Column, relTol: Double, absSlack: Double): Column =
@@ -31,20 +30,16 @@ object VerifiedQueries {
 
   // ---------- distinct-count sketches ----------
 
-  /** HLL + Bloom distinct-texts per lang, checked against exact
-    * COUNT(DISTINCT text) computed in the same aggregate. */
+  /** [[SparkQueries.hllDistinct]]'s HLL + Bloom distinct-texts per lang,
+    * checked against exact COUNT(DISTINCT text). */
   def hllDistinctVerified(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "documents")
-      .select(col("lang"), col("text"))
       .groupBy(col("lang"))
-      .agg(
-        countDistinct(col("text")).as("n_exact"),
-        SketchUdafs.hllCount(14)(col("text")).as("hll_est"),
-        SketchFunctions.bfEstimate(
-          SketchUdafs.bloom(100000, 0.01)(col("text"))).as("bloom_est"))
+      .agg(countDistinct(col("text")).as("n_exact"))
+      .join(SparkQueries.hllDistinct(spark, dir), "lang")
       .select(col("lang"), col("n_exact"),
-        withinBound(col("hll_est"), col("n_exact"), 0.03, 2).as("hll_ok"),
-        withinBound(col("bloom_est"), col("n_exact"), 0.03, 2).as("bloom_ok"))
+        withinBound(col("hll_distinct_texts"), col("n_exact"), 0.03, 2).as("hll_ok"),
+        withinBound(col("bloom_estimate"), col("n_exact"), 0.03, 2).as("bloom_ok"))
 
   /** Native (pure-Catalyst TypedImperativeAggregate) HLL, same check. */
   def hllDistinctNativeVerified(spark: SparkSession, dir: String): DataFrame =
@@ -76,46 +71,42 @@ object VerifiedQueries {
 
   // ---------- frequency sketches ----------
 
-  /** Heavy hitters: the exact top-1 source per lang must be reported by the
-    * HH sketch with an estimate in [true, true·1.05 + 2] (CMS overestimates,
-    * bounded at this cardinality). */
-  def cmsHeavyHittersVerified(spark: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(spark, dir, "documents").select(col("lang"), col("source"))
-    val counts = docs.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n_docs").desc, col("source"))
-    val top1 = counts.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("lang"), col("source").as("top_source"), col("n_docs").as("true_count"))
-    val sketch = docs.groupBy(col("lang"))
-      .agg(SketchUdafs.heavyHitters(3, 2048, 5)(col("source"), lit(1L)).as("hh"))
-    top1.join(sketch, "lang")
-      .select(col("lang"), col("top_source"), col("true_count"),
-        (element_at(col("hh"), col("top_source")).isNotNull &&
-          element_at(col("hh"), col("top_source")) >= col("true_count")).as("hh_found_ok"),
-        (element_at(col("hh"), col("top_source")) <=
-          col("true_count") * 1.05 + 2).as("est_close_ok"))
+  /** Exact top-1 `key` per `grp` (count desc, then key) checked against a
+    * heavy-hitter estimate frame (grp, key, est): the key must be reported
+    * with est >= the true count (`hh_found_ok`; CMS overestimates) and est
+    * <= true·1.05 + 2 (`est_close_ok`, bounded at these cardinalities).
+    * Emits (grp, key, true_count, hh_found_ok, est_close_ok). */
+  private def top1HeavyHitterChecks(rows: DataFrame, grp: String, key: String,
+                                    estimates: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col(grp)).orderBy(col("true_count").desc, col(key))
+    val top1 = rows.groupBy(col(grp), col(key)).agg(count(lit(1)).as("true_count"))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    top1.join(estimates.toDF(grp, key, "est"), Seq(grp, key), "left")
+      .select(col(grp), col(key), col("true_count"),
+        (col("est").isNotNull && col("est") >= col("true_count")).as("hh_found_ok"),
+        (col("est") <= col("true_count") * 1.05 + 2).as("est_close_ok"))
   }
+
+  /** [[SparkQueries.cmsHeavyHitters]]: the exact top-1 source per lang must
+    * be among the sketch's top sources, with a close estimate. */
+  def cmsHeavyHittersVerified(spark: SparkSession, dir: String): DataFrame =
+    top1HeavyHitterChecks(tbl(spark, dir, "documents"), "lang", "source",
+        SparkQueries.cmsHeavyHitters(spark, dir))
+      .withColumnRenamed("source", "top_source")
 
   /** Token-level vocabulary mining: the HeavyHitters sketch over EXPLODED
     * word tokens (~120x more rows than docs — the token-granularity regime a
-    * webtext pipeline actually runs sketches at), probe -> exact-verify: the
-    * exact per-lang top token must be in the sketch's top set with an
-    * estimate in [true, true * 1.05 + 2]. */
+    * webtext pipeline actually runs sketches at); the exact per-lang top
+    * token must be in the sketch's top set with a close estimate. */
   def vocabHeavyHittersVerified(spark: SparkSession, dir: String): DataFrame = {
     val toks = tbl(spark, dir, "documents")
       .select(col("lang"), explode(split(lower(col("text")), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
-    val counts = toks.groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("tok"))
-    val top1 = counts.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("lang"), col("tok").as("top_token"), col("n").as("true_count"))
     val sketch = toks.groupBy(col("lang"))
       .agg(SketchUdafs.heavyHitters(5, 8192, 5)(col("tok"), lit(1L)).as("hh"))
-    top1.join(sketch, "lang")
-      .select(col("lang"), col("top_token"), col("true_count"),
-        (element_at(col("hh"), col("top_token")).isNotNull &&
-          element_at(col("hh"), col("top_token")) >= col("true_count")).as("hh_found_ok"),
-        (element_at(col("hh"), col("top_token")) <=
-          col("true_count") * 1.05 + 2).as("est_close_ok"))
+      .select(col("lang"), explode(col("hh")))
+    top1HeavyHitterChecks(toks, "lang", "tok", sketch)
+      .withColumnRenamed("tok", "top_token")
   }
 
   /** Sketch-cube rollup: per-(lang, source) HLL + KLL sketches materialized
@@ -141,9 +132,9 @@ object VerifiedQueries {
         SketchFunctions.hllEstimate(col("hll")).as("hll_est"),
         SketchFunctions.kllQuantiles(col("kll"), array(lit(0.5), lit(0.95))).as("qs"))
       .select(col("lang"), col("hll_est"),
-        element_at(col("qs"), 1).as("p50_est"), element_at(col("qs"), 2).as("p95_est"))
+        element_at(col("qs"), 1).as("p50"), element_at(col("qs"), 2).as("p95"))
     val qchecks = quantileRankChecks(docs.select(col("lang"), col("v")), "lang", "v",
-      est.select(col("lang"), col("p50_est"), col("p95_est")),
+      est.select(col("lang"), col("p50"), col("p95")),
       Seq(("p50", 0.5), ("p95", 0.95)), relTol = 0.05)
     docs.groupBy(col("lang"))
       .agg(countDistinct(col("text")).as("n_exact"))
@@ -189,8 +180,7 @@ object VerifiedQueries {
   def cmsModesVerified(spark: SparkSession, dir: String): DataFrame = {
     val width = 2048
     val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(NativeCmsAgg.cmsNative(col("event_type"), lit(1L), width, 5).as("b"))
-      .head().getAs[Array[Byte]]("b")
+    val bytes = sketchBytes(ev, NativeCmsAgg.cmsNative(col("event_type"), lit(1L), width, 5))
     val n = graft.core.CountMinSketch.fromBytes(bytes).elementsAdded
     val minP = SketchFunctions.cmsCount(bytes)
     val meanP = SketchFunctions.cmsCountMean(bytes)
@@ -203,45 +193,40 @@ object VerifiedQueries {
         (abs(mmP(col("event_type")) - col("true_count")) <= bound).as("meanmin_close_ok"))
   }
 
-  /** CMS point counts per event type (codegen'd native probe): estimate is
-    * always >= the true count (min over rows of an overcounting grid). */
-  def cmsPointVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events").select(col("event_type"))
-    val bytes = ev.agg(NativeCmsAgg.cmsNative(col("event_type"), lit(1L), 2048, 5).as("b"))
-      .head().getAs[Array[Byte]]("b")
-    ev.groupBy(col("event_type")).agg(count(lit(1)).as("true_count"))
-      .withColumn("cms_est",
-        SketchExpressions.cmsCountNative(bytes, col("event_type")))
-      .select(col("event_type"), col("true_count"),
-        (col("cms_est") >= col("true_count")).as("ge_ok"),
-        (col("cms_est") <= col("true_count") * 1.05 + 2).as("close_ok"))
+  /** Exact per-key counts (key, true_count) of the one-column `keys`, with
+    * `est` = the codegen'd point probe of a sketch built over those keys. */
+  private def pointCounts(keys: DataFrame, sketch: Column => Column,
+                          probe: (Array[Byte], Column) => Column): DataFrame = {
+    val key = col(keys.columns.head)
+    val bytes = sketchBytes(keys, sketch(key))
+    keys.groupBy(key).agg(count(lit(1)).as("true_count")).withColumn("est", probe(bytes, key))
   }
 
-  /** Counting-bloom point counts: estimate >= true (no false negatives),
-    * and close at this load factor. */
-  def cbfCountsVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
-      .select(concat(lit("u"), (col("user_id") % 500).cast("string")).as("bucket"))
-    val bytes = ev.agg(SketchUdafs.cbf(2000, 0.01)(col("bucket"), lit(1L)).as("b"))
-      .head().getAs[Array[Byte]]("b")
-    ev.groupBy(col("bucket")).agg(count(lit(1)).as("true_count"))
-      .withColumn("cbf_est", SketchExpressions.cbfCountNative(bytes, col("bucket")))
-      .select(col("bucket"), col("true_count"),
-        (col("cbf_est") >= col("true_count")).as("ge_ok"))
-  }
+  /** CMS point counts per event type (codegen'd native probe): estimate is
+    * always >= the true count (min over rows of an overcounting grid). */
+  def cmsPointVerified(spark: SparkSession, dir: String): DataFrame =
+    pointCounts(tbl(spark, dir, "events").select(col("event_type")),
+        NativeCmsAgg.cmsNative(_, lit(1L), 2048, 5), SketchExpressions.cmsCountNative)
+      .select(col("event_type"), col("true_count"),
+        (col("est") >= col("true_count")).as("ge_ok"),
+        (col("est") <= col("true_count") * 1.05 + 2).as("close_ok"))
+
+  /** Counting-bloom point counts: estimate >= true (no false negatives). */
+  def cbfCountsVerified(spark: SparkSession, dir: String): DataFrame =
+    pointCounts(tbl(spark, dir, "events")
+        .select(concat(lit("u"), (col("user_id") % 500).cast("string")).as("bucket")),
+        SketchUdafs.cbf(2000, 0.01)(_, lit(1L)), SketchExpressions.cbfCountNative)
+      .select(col("bucket"), col("true_count"), (col("est") >= col("true_count")).as("ge_ok"))
 
   /** Counting-cuckoo point counts: at this (capacity, cardinality) the
     * fingerprint-exact count equals the true count. */
-  def ccfCountsVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
-      .select(concat(col("event_type"), lit("#"), (col("user_id") % 100).cast("string")).as("bucket"))
-    val bytes = ev.agg(SketchUdafs.countingCuckoo(20000, 4, 32)(col("bucket")).as("b"))
-      .head().getAs[Array[Byte]]("b")
-    ev.groupBy(col("bucket")).agg(count(lit(1)).as("true_count"))
-      .withColumn("ccf_count",
-        SketchExpressions.ccfCountNative(bytes, fingerprintBits = 32, col("bucket")))
-      .select(col("bucket"), col("true_count"), col("ccf_count"))
-  }
+  def ccfCountsVerified(spark: SparkSession, dir: String): DataFrame =
+    pointCounts(tbl(spark, dir, "events")
+        .select(concat(col("event_type"), lit("#"), (col("user_id") % 100).cast("string"))
+          .as("bucket")),
+        SketchUdafs.countingCuckoo(20000, 4, 32)(_),
+        SketchExpressions.ccfCountNative(_, fingerprintBits = 32, _))
+      .select(col("bucket"), col("true_count"), col("est").as("ccf_count"))
 
   /** Stream-threshold: the sketch-reported user set (est >= 30; CMS
     * overestimates, so no true user is missed) exact-verified — output is
@@ -259,17 +244,18 @@ object VerifiedQueries {
 
   // ---------- quantile sketches ----------
 
-  /** Rank-check booleans: for estimate column `est` over values `v` grouped
-    * by `grp`, ok(q) := rank window [count(v < est), count(v <= est)]
-    * overlaps q·n ± (relTol·n + 1). */
+  /** Rank-check booleans: for each (name, q) the estimate column `name` of
+    * `est` (one row per `grp`) over values `valueCol` grouped by `grp`,
+    * `name_ok` := rank window [count(v < est), count(v <= est)] overlaps
+    * q·n ± (relTol·n + 1). */
   private def quantileRankChecks(values: DataFrame, grp: String, valueCol: String,
                                  est: DataFrame, qs: Seq[(String, Double)],
                                  relTol: Double): DataFrame = {
     val joined = values.join(broadcast(est), grp)
     val aggs = qs.flatMap { case (name, _) =>
       Seq(
-        sum(when(col(valueCol) <= col(s"${name}_est"), 1L).otherwise(0L)).as(s"${name}_le"),
-        sum(when(col(valueCol) < col(s"${name}_est"), 1L).otherwise(0L)).as(s"${name}_lt"))
+        sum(when(col(valueCol) <= col(name), 1L).otherwise(0L)).as(s"${name}_le"),
+        sum(when(col(valueCol) < col(name), 1L).otherwise(0L)).as(s"${name}_lt"))
     } :+ count(lit(1)).as("n")
     val counted = joined.groupBy(col(grp)).agg(aggs.head, aggs.tail: _*)
     val checks = qs.map { case (name, q) =>
@@ -280,38 +266,21 @@ object VerifiedQueries {
     counted.select(col(grp) +: checks: _*)
   }
 
-  /** KLL text-length quantiles per lang, rank-checked against the exact data. */
-  def kllQuantilesVerified(spark: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(spark, dir, "documents")
-      .select(col("lang"), col("n_chars").cast("double").as("v"))
-    val est = docs.groupBy(col("lang"))
-      .agg(SketchUdafs.kll(200)(col("v")).as("kll"))
-      .select(col("lang"),
-        SketchFunctions.kllQuantiles(col("kll"),
-          array(lit(0.5), lit(0.9), lit(0.99))).as("qs"))
-      .select(col("lang"),
-        element_at(col("qs"), 1).as("p50_est"),
-        element_at(col("qs"), 2).as("p90_est"),
-        element_at(col("qs"), 3).as("p99_est"))
-    quantileRankChecks(docs, "lang", "v", est,
+  /** [[SparkQueries.kllQuantiles]] (text-length p50/p90/p99 per lang),
+    * rank-checked against the exact data. */
+  def kllQuantilesVerified(spark: SparkSession, dir: String): DataFrame =
+    quantileRankChecks(
+      tbl(spark, dir, "documents").select(col("lang"), col("n_chars").cast("double").as("v")),
+      "lang", "v", SparkQueries.kllQuantiles(spark, dir),
       Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99)), relTol = 0.05)
-  }
 
-  /** t-digest value quantiles per event type, rank-checked. */
-  def tdigestQuantilesVerified(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events").select(col("event_type"), col("value").as("v"))
-    val est = ev.groupBy(col("event_type"))
-      .agg(SketchUdafs.tdigest(100.0)(col("v")).as("td"))
-      .select(col("event_type"),
-        SketchFunctions.tdigestQuantiles(col("td"),
-          array(lit(0.5), lit(0.95), lit(0.99))).as("qs"))
-      .select(col("event_type"),
-        element_at(col("qs"), 1).as("p50_est"),
-        element_at(col("qs"), 2).as("p95_est"),
-        element_at(col("qs"), 3).as("p99_est"))
-    quantileRankChecks(ev, "event_type", "v", est,
+  /** [[SparkQueries.tdigestQuantiles]] (value p50/p95/p99 per event type),
+    * rank-checked against the exact data. */
+  def tdigestQuantilesVerified(spark: SparkSession, dir: String): DataFrame =
+    quantileRankChecks(
+      tbl(spark, dir, "events").select(col("event_type"), col("value").as("v")),
+      "event_type", "v", SparkQueries.tdigestQuantiles(spark, dir),
       Seq(("p50", 0.5), ("p95", 0.95), ("p99", 0.99)), relTol = 0.05)
-  }
 
   // ---------- membership telemetry ----------
 
@@ -413,23 +382,30 @@ object VerifiedQueries {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** SimHash blocking consistency over the exact near-dup pair set: for every
-    * pair with exact shingle-Jaccard >= 0.5 (DuckDB-reproducible), the
-    * C(6,3)-block candidate path must surface it iff full hamming <= 3. */
-  def simhashPairsVerified(spark: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val exactPairs = exactJaccardPairs(spark, docs, 0.5)
+  /** SimHash consistency tail: for every exact near-dup pair of `docs`
+    * (doc_id, text), `consistent_ok` := the pair is in `found` (id_a, id_b)
+    * iff its full 64-bit hamming distance is <= 3. */
+  private def simhashConsistency(docs: DataFrame, exactPairs: DataFrame,
+                                 found: DataFrame): DataFrame = {
     val sims = docs.select(col("doc_id"),
       graft.spark.fns.TextExpressions.simhash64Native(col("text")).as("sim"))
-    val found = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found"))
     exactPairs
       .join(sims.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), "id_a")
       .join(sims.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .join(found, col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
+      .join(found.select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found")),
+        col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
       .select(col("id_a"), col("id_b"),
         (coalesce(col("found"), lit(false)) ===
           (bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)).as("consistent_ok"))
+  }
+
+  /** [[SparkQueries.simhashPairs]] checked over the exact near-dup pair set:
+    * every pair with exact shingle-Jaccard >= 0.5 (DuckDB-reproducible) must
+    * be surfaced by the C(6,3)-block candidate path iff full hamming <= 3. */
+  def simhashPairsVerified(spark: SparkSession, dir: String): DataFrame = {
+    val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
+    simhashConsistency(docs, exactJaccardPairs(spark, docs, 0.5),
+      SparkQueries.simhashPairs(spark, dir))
   }
 
   /** INDEX-BACKED incremental simhash consistency (round-5): build the
@@ -442,24 +418,13 @@ object VerifiedQueries {
   def simhashIncrementalVerified(spark: SparkSession, dir: String): DataFrame = {
     import graft.spark.dedup.SimHashIndex
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val history = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") % 2 === 1)
-    SimHashIndex.create(history, "doc_id", "text", "graft_q_simhash_incr",
-      numBuckets = 16)
-    val exactPairs = exactJaccardPairs(spark, docs, 0.5)
-      .filter(col("id_a") % 2 === 1 || col("id_b") % 2 === 1)
-    val sims = docs.select(col("doc_id"),
-      graft.spark.fns.TextExpressions.simhash64Native(col("text")).as("sim"))
-    val found = SimHashIndex.incrementalPairs(batch, "doc_id", "text",
-      "graft_q_simhash_incr", maxHamming = 3)
-      .select(col("id_a").as("f_a"), col("id_b").as("f_b"), lit(true).as("found"))
-    exactPairs
-      .join(sims.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(sims.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .join(found, col("id_a") === col("f_a") && col("id_b") === col("f_b"), "left")
-      .select(col("id_a"), col("id_b"),
-        (coalesce(col("found"), lit(false)) ===
-          (bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)).as("consistent_ok"))
+    SimHashIndex.create(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      "graft_q_simhash_incr", numBuckets = 16)
+    simhashConsistency(docs,
+      exactJaccardPairs(spark, docs, 0.5)
+        .filter(col("id_a") % 2 === 1 || col("id_b") % 2 === 1),
+      SimHashIndex.incrementalPairs(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
+        "graft_q_simhash_incr", maxHamming = 3))
   }
 
   // ---------- text ----------
@@ -839,6 +804,17 @@ object VerifiedQueries {
 
   // ---------- streaming ----------
 
+  /** A collected fixture `ts` value as a java.sql.Timestamp. The fixture ts
+    * is TIMESTAMP_NTZ (LocalDateTime); its wall clock is pinned to UTC
+    * explicitly — Timestamp.valueOf would use the JVM default zone and shift
+    * windows on a non-UTC host. */
+  private def utcTimestamp(v: Any): java.sql.Timestamp = v match {
+    case t: java.sql.Timestamp => t
+    case ldt: java.time.LocalDateTime =>
+      java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
+    case i: java.time.Instant => java.sql.Timestamp.from(i)
+  }
+
   /** Structured-Streaming end to end, driver-checkable: the events table is
     * replayed through a MemoryStream in two deterministic batches into the
     * windowed sketch aggregation (incremental state store), then the sink is
@@ -852,18 +828,7 @@ object VerifiedQueries {
       .select(col("event_id"), col("ts"), col("event_type"),
         col("user_id").cast("string").as("user"))
     val rows: Array[(Long, java.sql.Timestamp, String, String)] = events.collect()
-      .map { r =>
-        // the fixture ts is TIMESTAMP_NTZ (LocalDateTime); pin the wall-clock
-        // to UTC explicitly — Timestamp.valueOf would use the JVM default
-        // zone and shift windows on a non-UTC host
-        val ts = r.get(1) match {
-          case t: java.sql.Timestamp => t
-          case ldt: java.time.LocalDateTime =>
-            java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
-          case i: java.time.Instant => java.sql.Timestamp.from(i)
-        }
-        (r.getLong(0), ts, r.getString(2), r.getString(3))
-      }
+      .map(r => (r.getLong(0), utcTimestamp(r.get(1)), r.getString(2), r.getString(3)))
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String, String)]
@@ -914,15 +879,7 @@ object VerifiedQueries {
     val events = tbl(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"))
     val rows: Array[(java.sql.Timestamp, String)] = events.collect()
-      .map { r =>
-        val ts = r.get(1) match {
-          case t: java.sql.Timestamp => t
-          case ldt: java.time.LocalDateTime =>
-            java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
-          case i: java.time.Instant => java.sql.Timestamp.from(i)
-        }
-        (ts, r.getString(2))
-      }
+      .map(r => (utcTimestamp(r.get(1)), r.getString(2)))
     val maxTs = rows.map(_._1.getTime).max
     val lateReplay = rows.filter(_._1.getTime <= maxTs - 2L * 3600 * 1000)
 
@@ -1177,15 +1134,12 @@ object VerifiedQueries {
 
   // ---------- ANN ----------
 
-  /** Exact brute-force cosine top-5 (query set = vec_id < 10), emitted with
-    * deterministic (sim desc, vec_id) ranks — DuckDB recomputes it exactly. */
-  def annBruteForceVerified(spark: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    Ann.bruteForceTopK(emb.select(col("vec_id"), col("embedding")), queries, 5)
+  /** [[SparkQueries.annBruteForce]]: exact cosine top-5 (query set =
+    * vec_id < 10) with deterministic (sim desc, vec_id) ranks — DuckDB
+    * recomputes it exactly, so the projection only fixes the rank type. */
+  def annBruteForceVerified(spark: SparkSession, dir: String): DataFrame =
+    SparkQueries.annBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rank"))
-  }
 
   /** LSH ANN recall >= threshold per query (recall itself is deterministic;
     * the bound is the driver-checkable projection). */
@@ -1234,11 +1188,8 @@ object VerifiedQueries {
     * (which also re-trains, so the flag additionally pins training
     * determinism). codec_ok pins fromBytes(toBytes) byte identity. */
   def annIndexRoundtripVerified(spark: SparkSession, dir: String): DataFrame = {
-    import graft.spark.ann.{Ann, IvfPqModel}
-    val emb = tbl(spark, dir, "embeddings")
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+    import graft.spark.ann.IvfPqModel
+    val (corpus, queries) = SparkQueries.annInputs(spark, dir)
     val model = Ann.trainIvfPqModel(corpus, dim = 64)
     val bytes = model.toBytes
     val reloaded = IvfPqModel.fromBytes(bytes)
@@ -1285,50 +1236,32 @@ object VerifiedQueries {
 
   // ---------- flagship ----------
 
-  /** The north-star pages battery, flattened to scalar columns and verified:
-    * exact n_pages + top domain (oracle = PagesTruth literals), HLL/Bloom
-    * distinct-url estimates vs exact COUNT(DISTINCT url), HH containment of
-    * the exact top domain, KLL length quantiles rank-checked. */
+  /** [[SparkQueries.pagesSketchBattery]], flattened to scalar columns and
+    * verified: exact n_pages + top domain (oracle = PagesTruth literals),
+    * HLL/Bloom distinct-url estimates vs exact COUNT(DISTINCT url), HH
+    * containment of the exact top domain, KLL length quantiles rank-checked.
+    * The exact top domain is derived with its own regex, independently of
+    * the battery's `substring_index` host split, so a PagesGen url-shape
+    * change shows up as a red `hh_ok`. */
   def pagesSketchBatteryVerified(spark: SparkSession, nPages: Long): DataFrame = {
     val pages = graft.spark.io.PagesGen.pages(spark, nPages)
-    val domain = regexp_extract(col("url"), "https://([^/]+)/", 1)
-    val base = pages.select(col("lang"), col("url"), domain.as("domain"),
-      length(col("text")).cast("double").as("text_len"))
-
-    val sketch = base.groupBy(col("lang")).agg(
-      NativeHllCountAgg.hllCountNative(col("url"), 14).as("hll_est"),
-      SketchFunctions.bfEstimate(
-        NativeSketchAggs.bloomNative(col("url"), 2000000, 0.01)).as("bloom_est"),
-      NativeSketchAggs.heavyHittersNative(col("domain"), lit(1L), 5, 4096, 5)
-        .as("top_domains"),
-      SketchFunctions.kllQuantiles(
-        NativeSketchAggs.kllNative(col("text_len"), 200),
-        array(lit(0.5), lit(0.95), lit(0.99))).as("lq"),
-      count(lit(1)).as("n_pages"))
-
-    val exact = base.groupBy(col("lang")).agg(
-      countDistinct(col("url")).as("exact_urls"))
-    val domCounts = base.groupBy(col("lang"), col("domain")).agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("domain"))
-    val topDom = domCounts.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("lang"), col("domain").as("top_domain"), col("n").as("top_count"))
-
-    val est = sketch.select(col("lang"),
-      element_at(col("lq"), 1).as("p50_est"),
-      element_at(col("lq"), 2).as("p95_est"),
-      element_at(col("lq"), 3).as("p99_est"))
+    val battery = SparkQueries.pagesSketchBattery(spark, nPages)
+    val exactUrls = pages.groupBy(col("lang")).agg(countDistinct(col("url")).as("exact_urls"))
+    val topDomain = top1HeavyHitterChecks(
+      pages.select(col("lang"), regexp_extract(col("url"), "https://([^/]+)/", 1).as("domain")),
+      "lang", "domain", battery.select(col("lang"), explode(col("top_domains"))))
     val ranks = quantileRankChecks(
-      base.select(col("lang"), col("text_len").as("v")), "lang", "v", est,
+      pages.select(col("lang"), length(col("text")).cast("double").as("v")), "lang", "v",
+      battery.select(col("lang"),
+        element_at(col("len_quantiles"), 1).as("p50"),
+        element_at(col("len_quantiles"), 2).as("p95"),
+        element_at(col("len_quantiles"), 3).as("p99")),
       Seq(("p50", 0.5), ("p95", 0.95), ("p99", 0.99)), relTol = 0.05)
-
-    sketch.join(exact, "lang").join(topDom, "lang").join(ranks, "lang")
-      .select(col("lang"), col("n_pages"), col("top_domain"),
-        withinBound(col("hll_est"), col("exact_urls"), 0.02, 2).as("hll_ok"),
-        withinBound(col("bloom_est"), col("exact_urls"), 0.02, 2).as("bloom_ok"),
-        (element_at(col("top_domains"), col("top_domain")).isNotNull &&
-          element_at(col("top_domains"), col("top_domain")) >= col("top_count") &&
-          element_at(col("top_domains"), col("top_domain")) <=
-            col("top_count") * 1.05 + 2).as("hh_ok"),
+    battery.join(exactUrls, "lang").join(topDomain, "lang").join(ranks, "lang")
+      .select(col("lang"), col("n_pages"), col("domain").as("top_domain"),
+        withinBound(col("distinct_urls_hll"), col("exact_urls"), 0.02, 2).as("hll_ok"),
+        withinBound(col("distinct_urls_bloom"), col("exact_urls"), 0.02, 2).as("bloom_ok"),
+        (col("hh_found_ok") && col("est_close_ok")).as("hh_ok"),
         col("p50_ok"), col("p95_ok"), col("p99_ok"))
   }
 

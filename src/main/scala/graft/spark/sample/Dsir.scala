@@ -70,11 +70,18 @@ object Dsir {
     // from a second thread so its tasks back-fill the raw scan's tail
     // (guide-§2.6 overlapping of independent jobs; results are plain count
     // aggregates, so concurrency cannot change the model)
-    val ctF = scala.concurrent.Future(fitCounts(target, textCol, buckets))(
-      scala.concurrent.ExecutionContext.global)
-    val cr = fitCounts(raw, textCol, buckets)
-    val ct = scala.concurrent.Await.result(
-      ctF, scala.concurrent.duration.Duration.Inf)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val ctF = Future(fitCounts(target, textCol, buckets))(ExecutionContext.global)
+    val cr = try fitCounts(raw, textCol, buckets) catch {
+      case scala.util.control.NonFatal(t) =>
+        // a failed raw side must not leave the target job running past this
+        // call: wait for it (its own failure, if any, is secondary) and
+        // report the raw failure
+        Await.ready(ctF, Duration.Inf)
+        throw t
+    }
+    val ct = Await.result(ctF, Duration.Inf)
     val st = ct.sum.toDouble + alpha * buckets
     val sr = cr.sum.toDouble + alpha * buckets
     Model(buckets, Array.tabulate(buckets) { b =>

@@ -53,6 +53,22 @@ class DsirSpec extends AnyFunSuite {
     expected.foreach { case (b, c) => assert(counts(b) == c, s"bucket $b") }
   }
 
+  test("fit: a failing raw side still waits for the target-side job") {
+    import spark.implicits._
+    // target side: a slow scan (two partitions sleeping 1.2 s each)
+    val slow = spark.range(0, 2, 1, 2)
+      .mapPartitions { it => Thread.sleep(1200); it.map(i => s"tok$i tok") }
+      .toDF("text")
+    // raw side: fails at once (no text column to analyse)
+    val broken = spark.range(1).toDF("id")
+    intercept[org.apache.spark.sql.AnalysisException](
+      Dsir.fit(slow, broken, "text", buckets = B))
+    Thread.sleep(300) // the status store learns of job ends asynchronously
+    val active = spark.sparkContext.statusTracker.getActiveJobIds
+    assert(active.isEmpty,
+      s"fit returned while the target-side job was still running: jobs ${active.mkString(",")}")
+  }
+
   test("fit: Laplace smoothing gives unseen buckets the closed-form ratio") {
     import spark.implicits._
     val target = Seq("aa bb").toDF("text")

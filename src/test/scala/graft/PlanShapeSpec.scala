@@ -124,6 +124,21 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("BroadcastExchange".r.findAllIn(plan).length >= 3, plan)
   }
 
+  test("pipelineStats: the action plan reads the pinned stage relations, never parquet") {
+    // curate() pins its narrow stage-3/4 relations, so the per-lang action
+    // re-runs no upstream stage and scans no documents file
+    val plan = formatted(SparkQueries.pipelineStats(spark, dir))
+    assert(!plan.contains("Scan parquet"), s"q_pipeline action rescans parquet:\n$plan")
+  }
+
+  test("topKFlags: the flag plan is a projection of its input, no exchange") {
+    import org.apache.spark.sql.functions.col
+    import graft.spark.sample.Sampling
+    val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("n_chars"))
+    val plan = formatted(Sampling.topKFlags(d, "doc_id", col("n_chars").cast("double"), 200L))
+    assert(!plan.contains("Exchange"), s"topKFlags flag plan shuffles:\n$plan")
+  }
+
   test("sketch-cube rollup: per-lang merge reads the stored cube, never parquet") {
     import org.apache.spark.sql.functions._
     import graft.spark.aggs.{SaltedAgg, SketchUdafs}

@@ -26,6 +26,15 @@ class SurfaceSpec extends AnyFunSuite {
     }
   }
 
+  test("PagesGen urls keep the https://host/ shape the battery's host split assumes") {
+    val bad = graft.spark.io.PagesGen.pages(spark, 20000L)
+      .filter(!col("url").rlike("^https://[^/]+/")).select(col("url")).limit(5).collect()
+    assert(bad.isEmpty,
+      "SparkQueries.pagesSketchBattery takes the domain with " +
+        "substring_index(substring_index(url, '/', 3), '/', -1), which is the host only " +
+        s"for https://host/path urls; PagesGen now emits e.g. ${bad.map(_.getString(0)).mkString(", ")}")
+  }
+
   test("SQL surface: registered aggregates + scalar functions end to end") {
     SketchUdafs.registerAll(spark)
     SketchFunctions.registerAll(spark)
